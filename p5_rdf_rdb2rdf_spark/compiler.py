@@ -79,10 +79,6 @@ def _lit(v) -> Column:
     return _cached_col(("lit", v), lambda: F.lit(v))
 
 
-def _ccol(name: str) -> Column:
-    return _cached_col(("col", name), lambda: F.col(name))
-
-
 def _notnull(name: str) -> Column:
     return _cached_col(("nn", name), lambda: F.col(name).isNotNull())
 

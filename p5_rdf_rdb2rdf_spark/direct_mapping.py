@@ -32,7 +32,6 @@ Everything compiles to the shared Mapping IR -> one executor
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,11 +41,6 @@ from pyspark.sql import types as T
 from .ir import Mapping, PredicateObjectMap, TermMap, TriplesMap
 from .iri import iri_safe_py
 from .terms import KIND_BLANK, KIND_IRI, KIND_LITERAL, RDF_TYPE, natural_datatype
-
-
-def load_manifest(path: str) -> dict[str, Any]:
-    with open(path) as f:
-        return json.load(f)
 
 
 def _row_node_template(base: str, table: str, pk: list[str]) -> str:

@@ -20,18 +20,15 @@ so three exact rewrites on the encoded output suffice:
 Every rewrite is provably collision-free, so `iri_safe_col == quote(s,safe='')
 ∪ keep('~')` for all UTF-8 inputs (property-tested in tests/test_iri.py).
 A Python twin (`iri_safe_py`) is used by the driver-side mapping compiler for
-constants and by the golden-triple harness, and an Arrow-vectorized pandas
-UDF fallback exists for engines without ``url_encode``.
+constants and by the golden-triple harness.
 """
 
 from __future__ import annotations
 
 from urllib.parse import quote
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 _UNRESERVED = "-._~"
 
@@ -48,9 +45,3 @@ def iri_safe_col(col: Column) -> Column:
     enc = F.replace(enc, F.lit("*"), F.lit("%2A"))
     enc = F.replace(enc, F.lit("%7E"), F.lit("~"))
     return enc
-
-
-@F.pandas_udf(StringType())
-def iri_safe_udf(s: pd.Series) -> pd.Series:  # pragma: no cover - fallback
-    """Arrow-vectorized fallback with identical semantics."""
-    return s.map(lambda v: None if v is None else quote(str(v), safe=_UNRESERVED))

@@ -29,10 +29,6 @@ from ..spread import spread_small
 from .dedup import cosine_expr
 
 
-def _norm(v: Column) -> Column:
-    return F.sqrt(F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda s, x: s + x))
-
-
 def cosine_threshold_search(
     corpus: DataFrame,
     queries: DataFrame,

@@ -162,13 +162,6 @@ def bpe_tokenize(
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
 
-def _tok_eq(w: str):
-    """Single-arg lambda factory: a 2-param lambda (e.g. ``lambda x, w=w``)
-    would be mis-read by PySpark as an (element, index) higher-order lambda,
-    binding ``w`` to the index column — found the hard way."""
-    return lambda x: x == F.lit(w)
-
-
 def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Adds deterministic quality-feature columns:
 

@@ -2,15 +2,18 @@
 (BASELINE.json north_star, end-to-end):
 
     docs -> S1 span explode (+O40 invariant audit)
-         -> S2 relation/mention extraction (vectorized pandas UDFs)
+         -> S2 relation/mention extraction (one fused pandas/Arrow UDF)
          -> S3 entity linking (broadcast dictionary, scored)
-         -> S4 connected-components canonicalization (iterative, checkpointed)
+         -> S4 connected-components canonicalization (:func:`.cc.canonicalize`)
          -> S5 triple construction (canonical entity IRIs + provenance)
          -> S6 distinct-triple materialization into the partitioned graph
                table (GraphTable, predicate-bucketed)
 
-Every stage checkpoints through :class:`..io.checkpoint.StageCheckpointer`
-(per-partition lineage + row counts; resume = skip complete stages).
+With ``checkpoint=True`` (the default) stages S1-S5 checkpoint through
+:class:`..io.checkpoint.StageCheckpointer` (per-partition lineage + row
+counts; resume = skip complete stages). With ``checkpoint=False`` they run
+in memory (:class:`_NullCheckpointer`): no resume, and the stage outputs
+persisted for the run are released after the graph write.
 """
 
 from __future__ import annotations
@@ -23,9 +26,9 @@ from pyspark.sql import functions as F
 from ..io.checkpoint import StageCheckpointer
 from ..io.graph_table import GraphTable
 from ..terms import KIND_IRI
-from .cc import canonical_mapping, connected_components
+from .cc import canonicalize
 from .corpus import KG, TEMPLATES, entity_vocab
-from .linking import candidate_edges, entity_dictionary
+from .linking import candidate_edges, entity_dictionary, link_score
 from .mentions import extract_relations
 from .spans import explode_spans, span_invariant_violations
 
@@ -143,6 +146,7 @@ class _NullCheckpointer:
     def __init__(self, fuse: set[str] | None = None) -> None:
         self._lineage: dict = {"stages": {}}
         self._fuse = fuse or set()
+        self._persisted: list[DataFrame] = []
 
     def run_stage(self, stage, fn, inputs=None, meta=None, force=False):
         import time
@@ -153,6 +157,7 @@ class _NullCheckpointer:
             rows = None  # stays lazy: fused into the single consumer
         else:
             df = fn().persist()
+            self._persisted.append(df)
             rows = df.count()  # materialize now; later stages reuse the cache
         self._lineage["stages"][stage] = {
             "inputs": inputs or [],
@@ -165,6 +170,12 @@ class _NullCheckpointer:
 
     def lineage(self) -> dict:
         return self._lineage
+
+    def unpersist(self) -> None:
+        """Release the stage outputs this runner persisted."""
+        for df in self._persisted:
+            df.unpersist()
+        self._persisted.clear()
 
 
 def run_pipeline(
@@ -252,8 +263,6 @@ def run_pipeline(
             "entity_id",
             "canonical",
         )
-        from .linking import link_score
-
         out = mentions.join(F.broadcast(dict_h), ["h0", "h1"], "inner")
         out = out.withColumn(
             "score", link_score(F.col("surface"), F.col("canonical"))
@@ -268,67 +277,10 @@ def run_pipeline(
         # CC runs over vocabulary-sized string nodes (the link graph is
         # corpus-size-invariant); only the OUTPUT mapping is re-encoded to
         # the digest pairs the relations carry, so s5 joins long pairs
-        # instead of strings.
-        #
-        # r8 fast path (guide §1.2 — per-stage work is pure job-scheduling
-        # latency here): when s3 already counted the links frame and it is
-        # at or below connected_components' own driver threshold, the whole
-        # canonicalization — union-find, per-component min-entity canonical,
-        # surface mapping — runs driver-side in one collect instead of ~4
-        # small Spark jobs (size probe, edge collect, local-relation
-        # group/join, stage count). Identical output by construction: the
-        # distributed path's component id is the min node, its canonical is
-        # the min 'e:'-prefixed member, components with no entity node drop
-        # out (inner join) — all reproduced below with the same string
-        # ordering. The distributed path remains for big link graphs.
+        # instead of strings. When s3 counted the links, that count is the
+        # size hint: a small link graph then costs one collect and no probe.
         links_rows = ckpt.lineage()["stages"].get("s3_links", {}).get("rows")
-        if links_rows is not None and links_rows <= 200_000:
-            parent: dict = {}
-
-            def find(x):
-                r = x
-                while parent[r] != r:
-                    r = parent[r]
-                while parent[x] != r:  # path compression
-                    parent[x], x = r, parent[x]
-                return r
-
-            for row in links.select("surface", "entity_id").collect():
-                u, v = "s:" + row["surface"], "e:" + row["entity_id"]
-                parent.setdefault(u, u)
-                parent.setdefault(v, v)
-                ru, rv = find(u), find(v)
-                if ru != rv:
-                    parent[max(ru, rv)] = min(ru, rv)
-            members: dict = {}
-            for node in parent:
-                members.setdefault(find(node), []).append(node)
-            out_rows = []
-            for mem in members.values():
-                ents = [m for m in mem if m.startswith("e:")]
-                if not ents:
-                    continue
-                canon_ent = min(ents)[2:]
-                out_rows.extend(
-                    (m[2:], canon_ent) for m in mem if m.startswith("s:")
-                )
-            import pandas as pd
-
-            # pandas -> Arrow local relation (r8): the plain-list path
-            # pickles rows through py4j and forces the downstream s5
-            # broadcast build through the Python RDD path (see
-            # linking.entity_dictionary)
-            local = spark.createDataFrame(
-                pd.DataFrame(sorted(out_rows), columns=["surface", "entity_id"]),
-                "surface string, entity_id string",
-            )
-            return local.select(
-                F.xxhash64("surface", F.lit(0)).alias("h0"),
-                F.xxhash64("surface", F.lit(1)).alias("h1"),
-                "entity_id",
-            )
-        comps = connected_components(candidate_edges(links))
-        mapping = canonical_mapping(comps)
+        mapping = canonicalize(candidate_edges(links), size_hint=links_rows)
         return (
             mapping.where(F.col("node").startswith("s:"))
             .select(
@@ -366,6 +318,9 @@ def run_pipeline(
         dedup=False,
         distribute=False,
     )
+    if not checkpoint:
+        # the result re-reads the written table, so no cached stage is needed
+        ckpt.unpersist()
     return PipelineResult(
         triples=table.read(snapshot_id), snapshot_id=snapshot_id, lineage=ckpt.lineage()
     )

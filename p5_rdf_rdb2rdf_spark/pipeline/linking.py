@@ -1,15 +1,17 @@
-"""Entity linking: surface forms -> candidate entities, with vectorized
-scoring and skew-aware joins (BASELINE.json north_star: "entity-link scoring
-done in vectorized pandas/Arrow UDFs", "broadcast dictionaries for hot
-entities, salted hash joins for skewed predicates"; SURVEY.md O39).
+"""Entity linking: surface forms -> candidate entities (SURVEY.md O39).
+
+The dictionary is broadcast (BASELINE.json north_star: "broadcast
+dictionaries for hot entities"), so a hot surface never makes a skewed
+shuffle partition. Link scoring is a Column expression rather than the
+north_star's pandas/Arrow UDF: no Python worker runs for it at all
+(COVERAGE.md O39).
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def entity_dictionary(spark: SparkSession, vocab_rows: list[tuple[str, str, str]]) -> DataFrame:
@@ -34,69 +36,22 @@ def entity_dictionary(spark: SparkSession, vocab_rows: list[tuple[str, str, str]
     )
 
 
-@F.pandas_udf(T.DoubleType())
-def link_score(surface: pd.Series, canonical: pd.Series) -> pd.Series:
-    """Vectorized link scoring: exact-canonical 1.0, alias 0.9 - small
-    length penalty (a stand-in for a real embedding/edit-distance scorer;
-    the Spark-side plumbing — Arrow batches, two string columns in, one
-    double out — is the production shape)."""
-    exact = (surface == canonical).astype(float)
-    lp = (surface.str.len() - canonical.str.len()).abs().clip(upper=10) / 100.0
-    return exact + (1.0 - exact) * (0.9 - lp)
-
-
-def link_mentions(
-    mentions: DataFrame,
-    dictionary: DataFrame,
-    surface_col: str = "surface",
-    min_score: float = 0.5,
-) -> DataFrame:
-    """Join mentions to entity candidates and score.
-
-    The dictionary is a hot-entity-skewed small dimension -> **broadcast**
-    (north_star mandate): the join is map-side, no shuffle of the (huge)
-    mention fact table, and a hot surface (20% of docs) can't create a
-    skewed shuffle partition because there is no shuffle.
-    """
-    if "canonical" in dictionary.columns:
-        dict_c = dictionary
-    else:  # dictionaries built elsewhere: derive canonical distributedly
-        canon = dictionary.groupBy("entity_id").agg(F.min("surface").alias("canonical"))
-        dict_c = dictionary.join(F.broadcast(canon), "entity_id")
-    out = mentions.join(
-        F.broadcast(dict_c), mentions[surface_col] == dict_c["surface"], "inner"
-    ).drop(dict_c["surface"])
-    out = out.withColumn("score", link_score(F.col(surface_col), F.col("canonical")))
-    return out.where(F.col("score") >= min_score)
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt: int = 8,
-) -> DataFrame:
-    """Explicit skew-salted equi-join (SURVEY.md O39) for when the dimension
-    is too big to broadcast: fact keys get a deterministic salt from a
-    sibling column hash, dim rows are replicated across all salts.
-
-    Used as the fallback strategy; AQE's skew-join handles moderate skew, a
-    single mega-key on a non-broadcastable join needs this.
-    """
-    f = fact.withColumn("__salt", F.pmod(F.xxhash64(*fact.columns), F.lit(salt)).cast("int"))
-    d = dim.withColumn("__salt", F.explode(F.array([F.lit(i) for i in range(salt)])))
-    out = f.join(d, on=[key, "__salt"], how="inner").drop("__salt")
-    return out
+def link_score(surface: Column, canonical: Column) -> Column:
+    """Link scoring: exact-canonical 1.0, alias 0.9 - small length penalty
+    (a stand-in for a real embedding/edit-distance scorer). A plain Column
+    expression, so it runs inside whole-stage codegen with no Python worker
+    (lengths count code points, like Python's ``len``)."""
+    penalty = F.least(F.abs(F.length(surface) - F.length(canonical)), F.lit(10)) / 100.0
+    return F.when(surface == canonical, F.lit(1.0)).otherwise(0.9 - penalty)
 
 
 def candidate_edges(linked: DataFrame) -> DataFrame:
     """Linked mentions -> candidate entity-link edges for canonicalization:
-    (surface-node, entity-node) pairs, deduped. Node namespace prefixes keep
-    the bipartite graph unambiguous."""
-    return (
-        linked.select(
-            F.concat(F.lit("s:"), F.col("surface")).alias("src"),
-            F.concat(F.lit("e:"), F.col("entity_id")).alias("dst"),
-        )
-        .distinct()
+    (surface-node, entity-node) pairs. Node namespace prefixes keep the
+    bipartite graph unambiguous. Not deduplicated: both canonicalization
+    paths tolerate duplicate edges, and a distinct would put a shuffle in
+    front of the driver path's collect."""
+    return linked.select(
+        F.concat(F.lit("s:"), F.col("surface")).alias("src"),
+        F.concat(F.lit("e:"), F.col("entity_id")).alias("dst"),
     )

@@ -24,29 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-PAIR_SCHEMA = T.StructType(
-    [
-        T.StructField("a", T.StringType()),
-        T.StructField("b", T.StringType()),
-    ]
-)
-
-
-def pair_extractor(pattern: str):
-    """Regex with named groups a and b -> pandas UDF text -> struct<a,b>.
-
-    Non-matching rows yield a struct with null fields (filtered Spark-side).
-    """
-    rx = re.compile(pattern)
-
-    @F.pandas_udf(PAIR_SCHEMA)
-    def extract(texts: pd.Series) -> pd.DataFrame:
-        m = texts.str.extract(rx)  # vectorized, C regex loop
-        return pd.DataFrame({"a": m["a"], "b": m["b"]})
-
-    return extract
-
-
 # Python re's \s (and the negation \S) is Unicode: ASCII [\t-\r ] plus
 # \x1c-\x1f and every str.isspace() codepoint. RE2's default \s is ASCII-only,
 # so \S silently matches NBSP etc. under RE2. This explicit class IS Python's

@@ -180,12 +180,3 @@ def _as_list(v: Any) -> list:
     if v is None:
         return []
     return v if isinstance(v, list) else [v]
-
-
-# ---- JSON round trip of the *Simple document itself* (O37) ----------------
-
-
-def ir_to_simple_json(m: Mapping) -> str:  # minimal round-trip surface
-    """Serialize an IR back to a Simple-style document where expressible
-    (used for checkpointing mapping lineage in the pipeline)."""
-    return m.to_json()

@@ -6,12 +6,11 @@ dict of table-name -> DataFrame plus a constraints manifest; this module
 builds that dict from the places a Spark deployment actually reads:
 
 - a directory of parquet files (one per table) — the sandbox/test path
-- an Iceberg/HMS catalog namespace — the production path
 - a JDBC connection — the closest 1:1 analog of the reference's DBI usage
   (Spark pushes projections/filters down to the RDBMS exactly like the
   reference delegates SQL to it)
 
-All return the same ``dict[str, DataFrame]`` the mapping engine consumes, so
+Both return the same ``dict[str, DataFrame]`` the mapping engine consumes, so
 a user of the reference pointing at Postgres can switch with one call.
 """
 
@@ -36,19 +35,6 @@ def from_parquet_dir(
         if register_views:
             df.createOrReplaceTempView(table)
         out[table] = df
-    return out
-
-
-def from_catalog(
-    spark: SparkSession, namespace: str, register_views: bool = False
-) -> dict[str, DataFrame]:
-    """All tables of a catalog namespace (Iceberg/HMS production path)."""
-    out: dict[str, DataFrame] = {}
-    for t in spark.catalog.listTables(namespace):
-        df = spark.table(f"{namespace}.{t.name}")
-        if register_views:
-            df.createOrReplaceTempView(t.name)
-        out[t.name] = df
     return out
 
 

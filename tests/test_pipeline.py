@@ -22,6 +22,7 @@ from p5_rdf_rdb2rdf_spark.pipeline.spans import (
     reassemble_docs,
     span_invariant_violations,
 )
+from plan_nodes import count_nodes
 
 N_DOCS = 200
 
@@ -108,16 +109,103 @@ def test_pipeline_resume_identical(spark, tmp_path):
     assert t1 == t2
 
 
+def test_pipeline_in_memory_matches_checkpointed(spark, tmp_path):
+    """checkpoint=False gives the checkpointed run's triples and releases
+    every stage frame it persisted once the graph is written."""
+    docs = synth_corpus(spark, N_DOCS, partitions=4)
+    want = run_pipeline(spark, docs, str(tmp_path / "ckpt"), n_buckets=4)
+    want = sorted(map(tuple, want.triples.collect()))
+    spark.catalog.clearCache()
+    got = run_pipeline(spark, docs, str(tmp_path / "mem"), n_buckets=4, checkpoint=False)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert sorted(map(tuple, got.triples.collect())) == want
+
+
+def test_kg_plan_python_nodes(spark, tmp_path, monkeypatch):
+    """The s2 extractor is the only Python node on the KG path: each
+    checkpointed stage plan but s2's has none, and with every stage fused
+    into one plan the triples plan holds exactly one."""
+    import p5_rdf_rdb2rdf_spark.pipeline.kgpipeline as kp
+    from p5_rdf_rdb2rdf_spark.io.checkpoint import StageCheckpointer
+
+    python = ("ArrowEvalPythonExec", "BatchEvalPythonExec")
+    stages = ["s1_spans", "s2_relations", "s3_links", "s4_canon", "s5_triples"]
+    docs = synth_corpus(spark, 50, partitions=2)
+
+    # checkpointed: each stage's plan starts at the previous checkpoint
+    built = {}
+    run_stage = StageCheckpointer.run_stage
+
+    def capture(self, stage, fn, *a, **kw):
+        return run_stage(self, stage, lambda: built.setdefault(stage, fn()), *a, **kw)
+
+    monkeypatch.setattr(StageCheckpointer, "run_stage", capture)
+    run_pipeline(spark, docs, str(tmp_path / "ckpt"), n_buckets=4)
+    assert {st: count_nodes(built[st], *python) for st in stages} == {
+        st: int(st == "s2_relations") for st in stages
+    }
+
+    # fused: one plan from the documents to the triples
+    fused = {}
+
+    class FuseAll(kp._NullCheckpointer):
+        def __init__(self, fuse=None):
+            super().__init__(fuse=set(stages))
+
+        def run_stage(self, stage, fn, *a, **kw):
+            fused[stage] = super().run_stage(stage, fn, *a, **kw)
+            return fused[stage]
+
+    monkeypatch.setattr(kp, "_NullCheckpointer", FuseAll)
+    run_pipeline(
+        spark, docs, str(tmp_path / "mem"), n_buckets=4,
+        audit_invariant=False, checkpoint=False,
+    )
+    triples = fused["s5_triples"]
+    assert triples.collect()
+    assert count_nodes(triples, *python) == 1
+
+
+def test_link_score_matches_pandas_formula(spark):
+    """The Column-expression link score equals the former pandas UDF's
+    formula bit for bit on random Unicode pairs, astral code points included
+    (both count string length in code points)."""
+    import random
+
+    from p5_rdf_rdb2rdf_spark.pipeline.linking import link_score
+
+    rng = random.Random(7)
+    alphabet = "abcXYZ 09-_éß字𝔘"
+    pairs = []
+    for _ in range(500):
+        s = "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 16)))
+        c = s if rng.random() < 0.2 else "".join(
+            rng.choice(alphabet) for _ in range(rng.randrange(0, 16))
+        )
+        pairs.append((s, c))
+    surface = pd.Series([s for s, _ in pairs])
+    canonical = pd.Series([c for _, c in pairs])
+    exact = (surface == canonical).astype(float)
+    lp = (surface.str.len() - canonical.str.len()).abs().clip(upper=10) / 100.0
+    want = list(exact + (1.0 - exact) * (0.9 - lp))
+
+    df = spark.createDataFrame(
+        [(i, s, c) for i, (s, c) in enumerate(pairs)], "i int, s string, c string"
+    )
+    got = df.select("i", link_score(F.col("s"), F.col("c")).alias("score"))
+    got = [r.score for r in sorted(got.collect())]
+    assert got == want
+
+
 def test_cc_merges_aliases(spark):
     """alias surfaces and canonical surfaces land on the same entity."""
-    from p5_rdf_rdb2rdf_spark.pipeline.cc import canonical_mapping, connected_components
+    from p5_rdf_rdb2rdf_spark.pipeline.cc import canonicalize
 
     edges = spark.createDataFrame(
         [("s:alias000", "e:E000"), ("s:entity000", "e:E000"), ("s:entity001", "e:E001")],
         "src string, dst string",
     )
-    comps = connected_components(edges)
-    mapping = {r.node: r.canonical_entity for r in canonical_mapping(comps).collect()}
+    mapping = {r.node: r.canonical_entity for r in canonicalize(edges).collect()}
     assert mapping["s:alias000"] == "E000"
     assert mapping["s:entity000"] == "E000"
     assert mapping["s:entity001"] == "E001"
@@ -135,11 +223,13 @@ def test_cc_chain_converges(spark):
     assert comps.select("component").distinct().count() == 1
 
 
-def test_cc_driver_and_distributed_paths_identical(spark):
+def test_cc_driver_and_distributed_paths_identical(spark, monkeypatch):
     """The small-graph union-find fast path and the iterative distributed
     path must produce identical (node, component) output on the same graph,
-    including min-label choice across multi-component graphs."""
-    from p5_rdf_rdb2rdf_spark.pipeline.cc import connected_components
+    including min-label choice across multi-component graphs — and so must
+    the two paths of the canonicalization kernel built on them."""
+    from p5_rdf_rdb2rdf_spark.pipeline import cc
+    from p5_rdf_rdb2rdf_spark.pipeline.cc import canonicalize, connected_components
 
     # pseudo-random multi-component graph, deterministic
     edges = [(f"n{(i * 7) % 40:03d}", f"n{(i * 11 + 3) % 40:03d}") for i in range(25)]
@@ -148,6 +238,17 @@ def test_cc_driver_and_distributed_paths_identical(spark):
     fast = sorted(map(tuple, connected_components(df).collect()))
     dist = sorted(map(tuple, connected_components(df, driver_threshold=0).collect()))
     assert fast == dist and fast
+
+    # canonicalize: bipartite surface/entity links, a duplicate edge, and a
+    # component without any entity node (it must drop out on both paths)
+    links = [(f"s:{(i * 7) % 30:03d}", f"e:{(i * 11 + 3) % 12:03d}") for i in range(25)]
+    links += [("s:dup", "e:900"), ("s:dup", "e:900"), ("s:orphan_a", "s:orphan_b")]
+    ldf = spark.createDataFrame(links, "src string, dst string")
+    fast = sorted(map(tuple, canonicalize(ldf).collect()))
+    monkeypatch.setattr(cc, "DRIVER_THRESHOLD", 0)  # forces the distributed path
+    dist = sorted(map(tuple, canonicalize(ldf).collect()))
+    assert fast == dist and fast
+    assert ("s:dup", "900") in fast and not {"s:orphan_a", "s:orphan_b"} & {n for n, _ in fast}
 
 
 def test_cc_fast_path_preserves_node_type(spark):
@@ -513,9 +614,5 @@ def test_build_triples_matches_two_branch_reference_and_plan(spark):
     # object relation is dropped whole by the inner join, prov included)
     assert len(g) == 4
 
-    # AQE's executed-plan string repeats the tree under "== Initial Plan =="
-    # once finalized — count the dedup exchange in the final section only
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    plan = plan.split("== Initial Plan ==")[0]
-    import re
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1
+    # one dedup exchange in the final (AQE) plan tree
+    assert count_nodes(got, "ShuffleExchangeExec") == 1
