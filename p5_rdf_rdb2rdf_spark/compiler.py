@@ -458,7 +458,7 @@ def _compile_memo_key(
     persist_sources: bool,
 ):
     return (
-        id(spark.sparkContext._jsc),
+        spark.sparkContext.applicationId,
         mapping.to_json(sort_keys=True),
         dedup,
         tuple(sorted(broadcast_parents or ())),
@@ -518,15 +518,17 @@ def compile_mapping(
     if dedup:
         df = df.dropDuplicates(TRIPLE_COLUMNS)
     if key is not None:
-        if len(_COMPILE_MEMO) >= _COMPILE_MEMO_CAP:
-            _COMPILE_MEMO.clear()
-        _COMPILE_MEMO[key] = (
-            {
+        try:
+            sources = {
                 name: resolve_source(spark, tm, tables)
                 for name, tm in mapping.triples_maps.items()
-            },
-            df,
-        )
+            }
+        except Exception:  # noqa: BLE001 - e.g. a view dropped meanwhile: skip the store
+            return df
+        _COMPILE_MEMO.pop(key, None)
+        if len(_COMPILE_MEMO) >= _COMPILE_MEMO_CAP:
+            del _COMPILE_MEMO[next(iter(_COMPILE_MEMO))]  # evict the oldest
+        _COMPILE_MEMO[key] = (sources, df)
     return df
 
 

@@ -207,42 +207,14 @@ def _dm_patterns(
 
 def _pattern_lut(vals: list[str | None]) -> Any:
     """pattern-id -> constant metadata column (predicate IRI / kind /
-    datatype), as one array literal indexed by ``__dm_pid``.
+    datatype), as one array of literals indexed by ``__dm_pid``. The items
+    are the compiler's cached literal Columns (a repeated build pays no
+    per-item py4j round-trips), and no value passes through the SQL parser,
+    so any base IRI survives every parser setting."""
+    from .compiler import _lit, _null
 
-    Built as ONE ``F.expr`` instead of ``F.array(*[F.lit(v).cast(...)])``:
-    each lit+cast is two eager py4j round-trips, and three luts of ~13-20
-    entries per table measured ~0.5s of every dm_full plan build (the bench
-    pays construction per rep; guide §1). The SQL literal escaping covers
-    the only metacharacters a string literal has (backslash, quote)."""
-
-    def q(v: str | None) -> str:
-        if v is None:
-            return "NULL"
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    items = ",".join(q(v) for v in vals)
-    return F.expr(
-        f"element_at(cast(array({items}) as array<string>), __dm_pid + 1)"
-    )
-
-
-def _finish_unpivot(rows: DataFrame, subject: TermMap, pats: list[tuple]) -> DataFrame:
-    """Attach subject / predicate / kind / datatype to exploded
-    (pk..., __dm_pid, __dm_oval) rows — the shared tail of both unpivot
-    maps."""
-    from .compiler import compile_term
-
-    subj_out = compile_term(subject, rows.schema)
-    return rows.select(
-        F.lit(subject.term_type).alias("s_kind"),
-        subj_out.value.alias("s_value"),
-        _pattern_lut([p for p, _, _ in pats]).alias("p_value"),
-        _pattern_lut([k for _, k, _ in pats]).alias("o_kind"),
-        F.col("__dm_oval").alias("o_value"),
-        _pattern_lut([d for _, _, d in pats]).alias("o_datatype"),
-        F.lit(None).cast("string").alias("o_lang"),
-        F.lit(None).cast("string").alias("g_value"),
-    )
+    items = [_null() if v is None else _lit(v) for v in vals]
+    return F.element_at(F.array(*items), F.col("__dm_pid") + 1)
 
 
 def _compact_dedup_map(
@@ -341,7 +313,16 @@ def _compact_dedup_map(
         .where(F.col("__dm_oval").isNotNull())
         .dropDuplicates([*pk_cols, "__dm_pid", "__dm_oval"])
     )
-    return _finish_unpivot(rows, subject, pats)
+    return rows.select(
+        F.lit(subject.term_type).alias("s_kind"),
+        compile_term(subject, rows.schema).value.alias("s_value"),
+        _pattern_lut([p for p, _, _ in pats]).alias("p_value"),
+        _pattern_lut([k for _, k, _ in pats]).alias("o_kind"),
+        F.col("__dm_oval").alias("o_value"),
+        _pattern_lut([d for _, _, d in pats]).alias("o_datatype"),
+        F.lit(None).cast("string").alias("o_lang"),
+        F.lit(None).cast("string").alias("g_value"),
+    )
 
 
 def direct_map(

@@ -9,11 +9,13 @@
          -> S6 distinct-triple materialization into the partitioned graph
                table (GraphTable, predicate-bucketed)
 
-With ``checkpoint=True`` (the default) stages S1-S5 checkpoint through
-:class:`..io.checkpoint.StageCheckpointer` (per-partition lineage + row
-counts; resume = skip complete stages). With ``checkpoint=False`` they run
-in memory (:class:`_NullCheckpointer`): no resume, and the stage outputs
-persisted for the run are released after the graph write.
+Every stage runs through the one stage runner,
+:class:`..io.checkpoint.StageCheckpointer`. With ``checkpoint=True`` (the
+default) stages S1-S5 write parquet checkpoints under ``workdir``
+(per-partition lineage + row counts; resume = skip complete stages). With
+``checkpoint=False`` the runner has no root: multi-consumer stages are
+persisted + counted, single-consumer stages fuse into their consumer, there
+is no resume, and the persisted frames are released after the graph write.
 """
 
 from __future__ import annotations
@@ -129,55 +131,6 @@ def build_triples(relations: DataFrame, canon: DataFrame) -> DataFrame:
     )
 
 
-class _NullCheckpointer:
-    """In-memory stage runner (benchmarks / exploratory runs): identical
-    control flow, no per-stage parquet writes. Multi-consumer stage outputs
-    are persisted and materialized once — without this every downstream
-    consumer re-runs the whole upstream chain (corpus synthesis + pandas-UDF
-    extraction), which measured ~5x slower than the stage sum.
-
-    Stages named in ``fuse`` have exactly ONE downstream consumer, so their
-    persist+count is pure overhead — an extra barrier plus a cache
-    write+read of the pipeline's largest frames (spans, triples). Fused
-    stages stay lazy and whole-stage-codegen/Arrow-fuse into their consumer;
-    their lineage rows are recorded as None (the checkpointed path, which is
-    the resume/lineage contract, always materializes and counts)."""
-
-    def __init__(self, fuse: set[str] | None = None) -> None:
-        self._lineage: dict = {"stages": {}}
-        self._fuse = fuse or set()
-        self._persisted: list[DataFrame] = []
-
-    def run_stage(self, stage, fn, inputs=None, meta=None, force=False):
-        import time
-
-        t0 = time.time()
-        if stage in self._fuse:
-            df = fn()
-            rows = None  # stays lazy: fused into the single consumer
-        else:
-            df = fn().persist()
-            self._persisted.append(df)
-            rows = df.count()  # materialize now; later stages reuse the cache
-        self._lineage["stages"][stage] = {
-            "inputs": inputs or [],
-            "meta": meta or {},
-            "rows": rows,
-            "fused": stage in self._fuse,
-            "wall_sec": round(time.time() - t0, 2),
-        }
-        return df
-
-    def lineage(self) -> dict:
-        return self._lineage
-
-    def unpersist(self) -> None:
-        """Release the stage outputs this runner persisted."""
-        for df in self._persisted:
-            df.unpersist()
-        self._persisted.clear()
-
-
 def run_pipeline(
     spark: SparkSession,
     docs: DataFrame,
@@ -186,20 +139,20 @@ def run_pipeline(
     audit_invariant: bool = True,
     checkpoint: bool = True,
 ) -> PipelineResult:
-    if checkpoint:
-        ckpt = StageCheckpointer(spark, workdir)
-    else:
-        # single-consumer stages fuse into their consumer (no persist/count
-        # barrier): triples -> fused distinct+write always; s4's canon map
-        # -> the s5 broadcast (r8: its input is either a driver-local
-        # relation from the fast path or the CC output, and s5 is its only
-        # consumer — the persist+count was one pure-scheduling job per run);
-        # spans -> relation extraction unless the invariant audit needs
-        # spans twice
-        fuse = {"s5_triples", "s4_canon"} | (
-            set() if audit_invariant else {"s1_spans"}
-        )
-        ckpt = _NullCheckpointer(fuse=fuse)
+    # without checkpoints, single-consumer stages fuse into their consumer
+    # (no persist/count barrier): triples -> fused distinct+write always;
+    # s4's canon map -> the s5 broadcast (r8: its input is either a
+    # driver-local relation from the fast path or the CC output, and s5 is
+    # its only consumer — the persist+count was one pure-scheduling job per
+    # run); spans -> relation extraction unless the invariant audit needs
+    # spans twice. Fused stages stay lazy and whole-stage-codegen/Arrow-fuse
+    # into their consumer, skipping a barrier plus a cache write+read of the
+    # pipeline's largest frames (spans, triples). The checkpointed path, the
+    # resume/lineage contract, materializes every stage.
+    fuse = () if checkpoint else {"s5_triples", "s4_canon"} | (
+        set() if audit_invariant else {"s1_spans"}
+    )
+    ckpt = StageCheckpointer(spark, workdir if checkpoint else None, fuse=fuse)
     vocab = entity_vocab()
     dictionary = entity_dictionary(spark, vocab)
 
@@ -318,9 +271,8 @@ def run_pipeline(
         dedup=False,
         distribute=False,
     )
-    if not checkpoint:
-        # the result re-reads the written table, so no cached stage is needed
-        ckpt.unpersist()
+    # the result re-reads the written table, so no persisted stage is needed
+    ckpt.unpersist()
     return PipelineResult(
         triples=table.read(snapshot_id), snapshot_id=snapshot_id, lineage=ckpt.lineage()
     )

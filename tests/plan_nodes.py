@@ -7,12 +7,23 @@ The walk enters AQE's ``AdaptiveSparkPlanExec`` through its current
 
 from __future__ import annotations
 
+# every physical node whose explain name contains "Exchange"
+EXCHANGES = ("ShuffleExchangeExec", "BroadcastExchangeExec", "ReusedExchangeExec")
 
-def count_nodes(df, *class_names: str) -> int:
+
+def count_nodes(df, *class_names: str, partitioning: str | None = None) -> int:
     """Number of physical-plan nodes of ``df`` whose JVM class simple name is
     one of ``class_names`` (e.g. ``"ShuffleExchangeExec"``,
-    ``"ArrowEvalPythonExec"``)."""
+    ``"ArrowEvalPythonExec"``). With ``partitioning`` (e.g.
+    ``"HashPartitioning"``) only nodes whose output partitioning has that
+    class simple name count."""
     wanted = set(class_names)
+
+    def matches(node, name: str) -> bool:
+        return name in wanted and (
+            partitioning is None
+            or node.outputPartitioning().getClass().getSimpleName() == partitioning
+        )
 
     def walk(node) -> int:
         name = node.getClass().getSimpleName()
@@ -21,7 +32,7 @@ def count_nodes(df, *class_names: str) -> int:
         if name.endswith("QueryStageExec"):
             return walk(node.plan())
         children = node.children()
-        return (name in wanted) + sum(
+        return matches(node, name) + sum(
             walk(children.apply(i)) for i in range(children.size())
         )
 

@@ -219,6 +219,31 @@ def test_dm_pk_enforced_false_restores_set_semantics(spark):
     assert len([r for r in trusted if r[2].endswith("#b") and r[4] == "same"]) == 2
 
 
+@pytest.mark.parametrize("escaped", ["false", "true"])
+def test_dm_unenforced_key_path_any_base_any_parser(spark, escaped):
+    """The unenforced-key unpivot path emits the same triples as the global
+    dedup path for base IRIs holding a backslash, a quote or a tab, under
+    both ``spark.sql.parser.escapedStringLiterals`` settings: its pattern
+    lookup never passes a value through the SQL parser."""
+    conf = "spark.sql.parser.escapedStringLiterals"
+    prev = spark.conf.get(conf)
+    rows = [(1, "x", 1.5), (1, "x", 2.5), (2, None, None)]
+    df = spark.createDataFrame(rows, "k int, a string, d double")
+    mf = {"t": {"pk": ["k"], "fks": [], "pk_enforced": False}}
+    spark.conf.set(conf, escaped)
+    try:
+        for base in ["http://x/b\\s/", "http://x/it's/", "http://x/t\tab/", BASE]:
+            got = direct_map(spark, {"t": df}, mf, base=base)
+            want = direct_map(spark, {"t": df}, mf, base=base, assume_key_integrity=False)
+            g = sorted(map(tuple, got.collect()))
+            assert g == sorted(map(tuple, want.collect())), base
+            assert {r[2] for r in g} == {
+                RDF_TYPE, f"{base}t#a", f"{base}t#d", f"{base}t#k"
+            }, base
+    finally:
+        spark.conf.set(conf, prev)
+
+
 def test_direct_map_verify_keys_audit(spark):
     """ADVICE r5 #3: declared keys are trusted by default — verify_keys=True
     is the audit mode that pays one aggregate per enforced-PK table and

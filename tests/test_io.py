@@ -8,6 +8,7 @@ from p5_rdf_rdb2rdf_spark.direct_mapping import direct_map
 from p5_rdf_rdb2rdf_spark.fixtures import CONSTRAINTS
 from p5_rdf_rdb2rdf_spark.io.checkpoint import StageCheckpointer
 from p5_rdf_rdb2rdf_spark.io.graph_table import GraphTable
+from plan_nodes import EXCHANGES, count_nodes
 
 BASE = "http://example.com/base/"
 
@@ -74,7 +75,7 @@ def test_graph_table_fused_dedup_single_exchange(spark, tables, tmp_path):
         .sortWithinPartitions("pred_bucket")
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, plan
+    assert count_nodes(df, *EXCHANGES) == 1, plan
     assert "REPARTITION" not in plan, plan
     assert "rangepartitioning" not in plan.lower(), plan  # sort stayed local
 
@@ -553,6 +554,66 @@ def test_checkpointer_resume_and_lineage(spark, tmp_path):
     ck.reset_from("s1")
     ck.run_stage("s1", build)
     assert calls["n"] == 2  # re-ran after invalidation
+
+    # a fused stage is recorded but holds no checkpoint: never skipped
+    ck = StageCheckpointer(spark, str(tmp_path / "ck"), fuse={"f"})
+    for n in (3, 4):
+        assert ck.run_stage("f", build, inputs=["s1"]).count() == 10
+        assert calls["n"] == n
+    assert ck.lineage()["stages"]["f"]["materialized"] == "fused"
+    assert not (tmp_path / "ck" / "stage-f").exists()
+    ck.reset_from("s1")
+    assert ck.lineage()["stages"] == {}
+
+
+def test_checkpointer_resumes_pre_materialized_lineage(spark, tmp_path):
+    """A checkpoint directory whose lineage records predate the
+    ``materialized`` key still resumes."""
+    import json
+
+    root = tmp_path / "old"
+    spark.range(5).write.parquet(str(root / "stage-s1"))
+    (root / "_lineage.json").write_text(json.dumps({"stages": {"s1": {
+        "dir": str(root / "stage-s1"), "inputs": [], "rows": 5,
+        "partitions": [{"partition": 0, "rows": 5}], "wall_sec": 0.1,
+        "completed_at": 1.0, "meta": {},
+    }}}))
+    ck = StageCheckpointer(spark, str(root))
+
+    def build():
+        raise AssertionError("a complete stage must not re-run")
+
+    assert ck.run_stage("s1", build).count() == 5
+
+
+def test_checkpointer_without_root_persists_or_fuses(spark):
+    """Without a root, a stage is persisted and counted (its jobs run in
+    ``run_stage``) or, when fused, stays lazy and launches no job;
+    ``unpersist`` releases every persisted frame."""
+    sc = spark.sparkContext
+    ck = StageCheckpointer(spark, fuse={"f"})
+
+    def jobs_of(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            return run(), len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    p, p_jobs = jobs_of("ckpt-persist", lambda: ck.run_stage(
+        "p", lambda: spark.range(10).where("id % 2 = 0"), inputs=["src"]))
+    f, f_jobs = jobs_of("ckpt-fuse", lambda: ck.run_stage(
+        "f", lambda: p.select((F.col("id") + 1).alias("id")), inputs=["p"]))
+    assert p_jobs >= 1 and f_jobs == 0
+    assert p.is_cached and not f.is_cached
+    assert f.count() == 5
+    stages = ck.lineage()["stages"]
+    assert {k: (v["materialized"], v["rows"], v["inputs"]) for k, v in stages.items()} == {
+        "p": ("persist", 5, ["src"]),
+        "f": ("fused", None, ["p"]),
+    }
+    ck.unpersist()
+    assert not p.is_cached
 
 
 def test_driver_side_writers_guard_collect(spark):

@@ -111,14 +111,99 @@ def test_pipeline_resume_identical(spark, tmp_path):
 
 def test_pipeline_in_memory_matches_checkpointed(spark, tmp_path):
     """checkpoint=False gives the checkpointed run's triples and releases
-    every stage frame it persisted once the graph is written."""
+    every stage frame it persisted once the graph is written. Both modes
+    write one stage-record schema."""
     docs = synth_corpus(spark, N_DOCS, partitions=4)
     want = run_pipeline(spark, docs, str(tmp_path / "ckpt"), n_buckets=4)
-    want = sorted(map(tuple, want.triples.collect()))
     spark.catalog.clearCache()
     got = run_pipeline(spark, docs, str(tmp_path / "mem"), n_buckets=4, checkpoint=False)
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
-    assert sorted(map(tuple, got.triples.collect())) == want
+    assert sorted(map(tuple, got.triples.collect())) == sorted(
+        map(tuple, want.triples.collect())
+    )
+
+    common = {"inputs", "meta", "rows", "wall_sec", "materialized"}
+    parquet_only = {"dir", "partitions", "completed_at"}
+    materialized = {}
+    for result in (want, got):
+        for stage, rec in result.lineage["stages"].items():
+            assert common <= set(rec), (stage, rec)
+            assert (rec["rows"] is None) == (rec["materialized"] == "fused")
+            if rec["materialized"] == "parquet":
+                assert parquet_only <= set(rec), (stage, rec)
+            else:
+                assert not parquet_only & set(rec), (stage, rec)
+            materialized.setdefault(stage, []).append(rec["materialized"])
+    assert materialized == {
+        "s1_spans": ["parquet", "persist"],
+        "s2_relations": ["parquet", "persist"],
+        "s3_links": ["parquet", "persist"],
+        "s4_canon": ["parquet", "fused"],
+        "s5_triples": ["parquet", "fused"],
+    }
+
+
+def test_pipeline_resume_after_crash_mid_stage(spark, tmp_path, monkeypatch):
+    """A run killed inside s3, after s2 has checkpointed and with a partial
+    ``stage-s3_links/`` left behind, resumes without re-running s1 or s2,
+    rewrites s3, and yields a clean run's triples. The lineage manifest
+    never lists s3 before s3 completes."""
+    import json
+
+    import p5_rdf_rdb2rdf_spark.pipeline.kgpipeline as kp
+    from p5_rdf_rdb2rdf_spark.io.checkpoint import StageCheckpointer
+
+    docs = synth_corpus(spark, 100, partitions=4)
+    clean = run_pipeline(spark, docs, str(tmp_path / "clean"), n_buckets=4)
+    want = sorted(map(tuple, clean.triples.collect()))
+
+    wd = tmp_path / "wd"
+    s3_dir = wd / "stage-s3_links"
+
+    def listed() -> set[str]:
+        return set(json.loads((wd / "_lineage.json").read_text())["stages"])
+
+    class Killed(Exception):
+        pass
+
+    run_stage = StageCheckpointer.run_stage
+
+    def crash_in_s3(self, stage, fn, *a, **kw):
+        if stage != "s3_links":
+            return run_stage(self, stage, fn, *a, **kw)
+
+        def dying():
+            # the kill lands mid-write: some of s3's output is on disk
+            fn().limit(1).write.parquet(str(s3_dir))
+            assert listed() == {"s1_spans", "s2_relations"}
+            raise Killed
+
+        return run_stage(self, stage, dying, *a, **kw)
+
+    with monkeypatch.context() as m:
+        m.setattr(StageCheckpointer, "run_stage", crash_in_s3)
+        with pytest.raises(Killed):
+            run_pipeline(spark, docs, str(wd), n_buckets=4)
+    assert listed() == {"s1_spans", "s2_relations"}
+    partial = {f.name for f in s3_dir.iterdir()}
+    assert any(n.endswith(".parquet") for n in partial)
+
+    calls = {"s1": 0, "s2": 0}
+
+    def counting(key, orig):
+        def wrapped(*a, **kw):
+            calls[key] += 1
+            return orig(*a, **kw)
+        return wrapped
+
+    monkeypatch.setattr(kp, "explode_spans", counting("s1", kp.explode_spans))
+    monkeypatch.setattr(kp, "extract_relations", counting("s2", kp.extract_relations))
+    resumed = run_pipeline(spark, docs, str(wd), n_buckets=4)
+    assert calls == {"s1": 0, "s2": 0}  # resumed from their checkpoints
+    s3 = resumed.lineage["stages"]["s3_links"]
+    assert s3["rows"] == clean.lineage["stages"]["s3_links"]["rows"]
+    assert not partial & {f.name for f in s3_dir.iterdir() if f.suffix == ".parquet"}
+    assert sorted(map(tuple, resumed.triples.collect())) == want
 
 
 def test_kg_plan_python_nodes(spark, tmp_path, monkeypatch):
@@ -146,22 +231,17 @@ def test_kg_plan_python_nodes(spark, tmp_path, monkeypatch):
     }
 
     # fused: one plan from the documents to the triples
-    fused = {}
+    class FuseAll(StageCheckpointer):
+        def __init__(self, spark, root=None, fuse=()):
+            super().__init__(spark, root, fuse=stages)
 
-    class FuseAll(kp._NullCheckpointer):
-        def __init__(self, fuse=None):
-            super().__init__(fuse=set(stages))
-
-        def run_stage(self, stage, fn, *a, **kw):
-            fused[stage] = super().run_stage(stage, fn, *a, **kw)
-            return fused[stage]
-
-    monkeypatch.setattr(kp, "_NullCheckpointer", FuseAll)
+    monkeypatch.setattr(kp, "StageCheckpointer", FuseAll)
+    built.clear()
     run_pipeline(
         spark, docs, str(tmp_path / "mem"), n_buckets=4,
         audit_invariant=False, checkpoint=False,
     )
-    triples = fused["s5_triples"]
+    triples = built["s5_triples"]
     assert triples.collect()
     assert count_nodes(triples, *python) == 1
 

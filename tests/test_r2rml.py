@@ -130,3 +130,61 @@ def test_compile_mapping_memo_correct_and_staleness_guarded(spark):
     # flags are part of the key
     out3 = compile_mapping(spark, ir, tables={"memo_t": df2}, dedup=True)
     assert out3 is not out2
+
+
+_MEMO_TTL = """
+@prefix rr: <http://www.w3.org/ns/r2rml#> .
+<#T> rr:logicalTable [ rr:tableName "memo_t" ] ;
+  rr:subjectMap [ rr:template "http://x/{k}" ] ;
+  rr:predicateObjectMap [ rr:predicate <http://p/%s> ;
+    rr:objectMap [ rr:column "v" ] ] .
+"""
+
+
+def test_compile_memo_evicts_oldest_at_cap(spark, monkeypatch):
+    """A full memo evicts its oldest plan, not every plan: with room for
+    two, compiling A, B, C and then B again is a hit on B."""
+    from p5_rdf_rdb2rdf_spark import compiler
+
+    monkeypatch.setattr(compiler, "_COMPILE_MEMO", {})
+    monkeypatch.setattr(compiler, "_COMPILE_MEMO_CAP", 2)
+    src = spark.createDataFrame([(1, "a")], "k int, v string")
+
+    def compile_(pred):
+        ir = r2rml_to_ir(_MEMO_TTL % pred)
+        return compile_mapping(spark, ir, tables={"memo_t": src}, dedup=False)
+
+    a, b, c = compile_("a"), compile_("b"), compile_("c")
+    assert compile_("b") is b
+    assert compile_("c") is c
+    assert compile_("a") is not a  # the oldest entry was the one evicted
+
+
+def test_compile_memo_store_failure_returns_plan(spark, monkeypatch):
+    """When resolving the sources again to store them in the memo fails
+    (e.g. a view dropped after the plan was built), compile_mapping still
+    returns the built plan, uncached."""
+    from p5_rdf_rdb2rdf_spark import compiler
+
+    monkeypatch.setattr(compiler, "_COMPILE_MEMO", {})
+    built = {"done": False}
+    union_all, resolve_source = compiler.union_all, compiler.resolve_source
+
+    def marking_union(parts):
+        built["done"] = True
+        return union_all(parts)
+
+    def resolve_until_built(*a, **kw):
+        if built["done"]:
+            raise RuntimeError("source vanished")
+        return resolve_source(*a, **kw)
+
+    monkeypatch.setattr(compiler, "union_all", marking_union)
+    monkeypatch.setattr(compiler, "resolve_source", resolve_until_built)
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    out = compile_mapping(spark, r2rml_to_ir(_MEMO_TTL % "v"), tables={"memo_t": src})
+    assert built["done"] and compiler._COMPILE_MEMO == {}
+    assert sorted((r.s_value, r.p_value, r.o_value) for r in out.collect()) == [
+        ("http://x/1", "http://p/v", "a"),
+        ("http://x/2", "http://p/v", "b"),
+    ]

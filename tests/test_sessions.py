@@ -5,6 +5,7 @@ from __future__ import annotations
 import datetime as dt
 
 from p5_rdf_rdb2rdf_spark.ops.sessions import session_stats, sessionize
+from plan_nodes import count_nodes
 
 
 def _ts(minutes: float) -> dt.datetime:
@@ -137,8 +138,7 @@ def test_sessionize_skew_observation_reports_mega_user(spark):
     df = spark.createDataFrame(rows, "event_id long, user_id long, ts timestamp")
     obs = Observation("session_skew")
     out = sessionize(df, gap_minutes=30, skew_observe=obs)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert count_nodes(out, "ShuffleExchangeExec", partitioning="HashPartitioning") == 1
     assert out.count() == 220
     m = obs.get
     assert m["max_events_per_user"] == 200

@@ -18,6 +18,7 @@ from p5_rdf_rdb2rdf_spark.ops.text import (
     shingle_array,
     token_count,
 )
+from plan_nodes import EXCHANGES, count_nodes
 
 SAMPLES = [
     "the quick brown fox",
@@ -184,9 +185,10 @@ def test_vocabulary_plan_linear_two_level_no_python(spark):
     from p5_rdf_rdb2rdf_spark.ops.text import vocabulary
 
     df = spark.createDataFrame([(1, "a b a")], "doc_id int, text string")
-    plan = vocabulary(df)._jdf.queryExecution().executedPlan().toString()
+    vocab = vocabulary(df)
+    plan = vocab._jdf.queryExecution().executedPlan().toString()
     assert "Python" not in plan
-    assert plan.count("Exchange") == 2, plan
+    assert count_nodes(vocab, *EXCHANGES) == 2, plan
     assert "transform(" not in plan  # no array-side quadratic build
 
 
