@@ -31,6 +31,7 @@ Scale notes (100 TB framing):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -496,6 +497,12 @@ def compile_mapping(
                 resolve_source(spark, mapping.triples_maps[name], tables).sameSemantics(src)
                 for name, src in cached_sources.items()
             ):
+                if persist_sources:
+                    # a cold compile persists them; so must a hit (e.g.
+                    # after clearCache)
+                    for src in cached_sources.values():
+                        if src.storageLevel == StorageLevel.NONE:
+                            src.persist()
                 return cached_df
         except Exception:  # noqa: BLE001 - e.g. a dropped temp view: recompile
             pass

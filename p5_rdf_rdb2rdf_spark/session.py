@@ -59,6 +59,13 @@ def get_spark(
         .config("spark.executor.memory", os.environ.get("SPARK_EXECUTOR_MEM", "4g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Generated-class cache sized to the engine's plans (Spark's default
+        # holds 100). One whole-schema map (DM of the 8-table star schema
+        # unioned with an R2RML join, written to a GraphTable) generates
+        # ~120 distinct classes, so at 100 entries every repeat evicted and
+        # recompiled ~115 of them with Janino; with room for them a repeat
+        # compiles 0. The KG pipeline's classes fit either way.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -262,3 +262,54 @@ def test_direct_map_verify_keys_audit(spark):
     manifest2 = {"t": {"pk": ["id"], "pk_enforced": False, "fks": []}}
     out = direct_map(spark, {"t": dup}, manifest2, verify_keys=True)
     assert out.count() == out.distinct().count()
+
+
+
+STAR_TABLES = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem", "events"]
+
+
+def _schema_map(spark, tpch, out_dir):
+    """DM of the star schema unioned with the orders-customer R2RML join,
+    written to a fresh graph table (one whole-schema map)."""
+    import __spark_entry__ as entry
+    from p5_rdf_rdb2rdf_spark.compiler import compile_mapping
+    from p5_rdf_rdb2rdf_spark.io.graph_table import GraphTable
+    from p5_rdf_rdb2rdf_spark.r2rml import r2rml_to_ir
+
+    tables = {t: tpch[t] for t in STAR_TABLES}
+    dm = direct_map(spark, tables, entry.TPCH_CONSTRAINTS, base=entry.BASE)
+    r = compile_mapping(
+        spark,
+        r2rml_to_ir(entry._R2RML_ORDERS),
+        tables=tables,
+        broadcast_parents={"#Customer"},
+    )
+    GraphTable(spark, str(out_dir), n_buckets=4).write(dm.unionByName(r))
+
+
+def _kg_pipeline(spark, tpch, out_dir):
+    """The in-memory KG pipeline over the 200-doc corpus (no tables used)."""
+    from p5_rdf_rdb2rdf_spark.pipeline.corpus import synth_corpus
+    from p5_rdf_rdb2rdf_spark.pipeline.kgpipeline import run_pipeline
+
+    docs = synth_corpus(spark, 200, partitions=4)
+    run_pipeline(
+        spark, docs, str(out_dir), n_buckets=4, checkpoint=False, audit_invariant=False
+    )
+
+
+@pytest.mark.parametrize(
+    "plan", [_schema_map, _kg_pipeline], ids=["schema_map", "kg_pipeline"]
+)
+def test_repeated_schema_map_compiles_no_code(spark, tpch, tmp_path, plan):
+    """Running the same plan again compiles no generated class: every class
+    of the first run is still in Spark's generated-code cache. A
+    whole-schema map generates more classes than Spark's default cache
+    holds (100), so without the session's larger cache the repeat would
+    recompile most of them; the KG pipeline's classes fit either way."""
+    from plan_nodes import codegen_compiles
+
+    plan(spark, tpch, tmp_path / "first")
+    with codegen_compiles(spark) as compiled:
+        plan(spark, tpch, tmp_path / "again")
+    assert compiled["n"] == 0

@@ -188,3 +188,25 @@ def test_compile_memo_store_failure_returns_plan(spark, monkeypatch):
         ("http://x/1", "http://p/v", "a"),
         ("http://x/2", "http://p/v", "b"),
     ]
+
+
+def test_compile_memo_hit_repersists_sources(spark, monkeypatch):
+    """A memo hit with ``persist_sources=True`` persists the sources again,
+    as a cold compile would: after ``clearCache`` the same plan comes back
+    with every source cached."""
+    from p5_rdf_rdb2rdf_spark import compiler
+
+    monkeypatch.setattr(compiler, "_COMPILE_MEMO", {})
+    src = spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string")
+    ir = r2rml_to_ir(_MEMO_TTL % "v")
+    try:
+        first = compile_mapping(spark, ir, tables={"memo_t": src}, persist_sources=True)
+        (sources, _), = compiler._COMPILE_MEMO.values()
+        assert all(s.storageLevel.useMemory for s in sources.values())
+        spark.catalog.clearCache()
+        assert not any(s.storageLevel.useMemory for s in sources.values())
+        again = compile_mapping(spark, ir, tables={"memo_t": src}, persist_sources=True)
+        assert again is first  # a memo hit
+        assert all(s.storageLevel.useMemory for s in sources.values())
+    finally:
+        src.unpersist()
